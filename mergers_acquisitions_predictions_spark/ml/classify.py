@@ -42,12 +42,30 @@ def train_weighted_lr(
 ):
     """M5+M7 (`lr.scala:32-44`): 80/20 split (seed 42), elastic-net
     weighted LR with the reference's hyperparameters. Returns
-    (model, train_df, test_df). The train split is NOT cached here:
-    fit_released persists it for the duration of the L-BFGS loop (which
-    re-reads it every iteration) and releases it on exit — a cache this
-    function created but handed to the caller would have no owner."""
-    weighted = with_class_weights(df, label_col)
-    train, test = weighted.randomSplit([0.8, 0.2], seed=seed)
+    (model, train_df, test_df).
+
+    ``df`` is materialized ONCE, as an eager local checkpoint: the
+    class-weight ratio, the split, every L-BFGS iteration, and later
+    scoring of ``test`` (``evaluate_auc``, ``confusion``) read those
+    blocks instead of re-running ``df``'s lineage (for the paper's
+    input: scan, label join, tokenizer, CountVectorizer, IDF). The
+    fixed partition layout also makes ``train`` and ``test`` exact
+    complements of ``df``: ``randomSplit`` samples each partition by
+    its index, so a lineage with a shuffle, evaluated once persisted
+    (for the fit) and once under AQE coalescing (for the test), would
+    split two different layouts.
+
+    ``model``, ``train`` and ``test`` share ownership of the blocks
+    (``own_local_checkpoint``): they are released once all three are
+    unreachable. ``model.summary`` reads ``train`` lazily, so the model
+    is an owner too. ``train`` is persisted only during the fit
+    (``fit_released``)."""
+    from ..operators.util import fit_released, own_local_checkpoint
+
+    data = df.localCheckpoint(eager=True)
+    train, test = with_class_weights(data, label_col).randomSplit(
+        [0.8, 0.2], seed=seed
+    )
     lr = LogisticRegression(
         featuresCol=features_col,
         labelCol=label_col,
@@ -56,9 +74,8 @@ def train_weighted_lr(
         regParam=reg,
         threshold=threshold,
     )
-    from ..operators.util import fit_released
-
     model = fit_released(lr, train)
+    own_local_checkpoint(model, data, train, test)
     return model, train, test
 
 

@@ -10,11 +10,25 @@ import weakref
 from pyspark.sql import DataFrame
 
 
-def _owner_lists(result: DataFrame) -> tuple[list[DataFrame], list]:
-    """The (caches, checkpoint-jdfs) lists released when ``result``'s
-    Python object dies. Created (with ONE finalizer) on first use;
-    subsequent own_* calls on the same result extend the same lists —
-    the finalizer captures the list objects, so growth is seen."""
+class _CheckpointLease:
+    """One ``localCheckpoint`` frame's blocks, held by every owner that
+    reads them: each owner keeps a strong reference, and the blocks are
+    released when the last reference goes (the lease's finalizer)."""
+
+    __slots__ = ("__weakref__",)
+
+    def __init__(self, jdf) -> None:
+        weakref.finalize(self, release_local_checkpoint, jdf)
+
+
+def _owner_lists(result) -> tuple[list[DataFrame], list[_CheckpointLease]]:
+    """The (caches, checkpoint-leases) lists tied to ``result``'s Python
+    object. Created (with ONE finalizer, which unpersists the caches)
+    on first use; subsequent own_* calls on the same result extend the
+    same lists — the finalizer captures the cache list object, so
+    growth is seen. The leases need no finalizer here: they die with
+    ``result``'s attribute, and release once no other owner holds
+    them."""
     caches = getattr(result, "_owned_caches", None)
     ckpts = getattr(result, "_owned_ckpts", None)
     if caches is None:
@@ -22,14 +36,12 @@ def _owner_lists(result: DataFrame) -> tuple[list[DataFrame], list]:
         result._owned_caches = caches
         result._owned_ckpts = ckpts
 
-        def _release(caches: list[DataFrame] = caches, ckpts: list = ckpts) -> None:
+        def _release(caches: list[DataFrame] = caches) -> None:
             for c in caches:
                 try:
                     c.unpersist(blocking=False)
                 except Exception:  # session already stopped — nothing to free
                     pass
-            for j in ckpts:
-                release_local_checkpoint(j)
 
         weakref.finalize(result, _release)
     return caches, ckpts
@@ -44,25 +56,23 @@ def own_caches(result: DataFrame, *frames: DataFrame) -> DataFrame:
     queries back-to-back (the driver harness runs 50+).
 
     Ownership TRANSFERS through composition: if a frame in ``frames``
-    itself owns caches or localCheckpoints (it came from an operator
-    that called own_caches / own_local_checkpoint), those move to
-    ``result`` and the intermediate's own finalizer becomes a no-op —
-    a wrapper plan dying early inside a composing operator (e.g. the
-    candidate frame inside lsh-then-verify) can then never release a
-    cache the final plan still needs. For plain persists this is a
-    perf knob, never correctness (a released plan silently
-    recomputes); for inherited CHECKPOINTS the transfer is load-
-    bearing — see own_local_checkpoint."""
+    itself owns caches (it came from an operator that called
+    own_caches), those move to ``result`` and the intermediate's own
+    finalizer becomes a no-op — a wrapper plan dying early inside a
+    composing operator (e.g. the candidate frame inside
+    lsh-then-verify) can then never release a cache the final plan
+    still needs. Its localCheckpoints are SHARED instead: ``result``
+    becomes one more owner (see own_local_checkpoint). For plain
+    persists this is a perf knob, never correctness (a released plan
+    silently recomputes); for inherited CHECKPOINTS it is load-
+    bearing."""
     owned, ckpts = _owner_lists(result)
     for f in frames:
         inherited = getattr(f, "_owned_caches", None)
         if inherited:
             owned.extend(inherited)
             inherited.clear()
-        ick = getattr(f, "_owned_ckpts", None)
-        if ick:
-            ckpts.extend(ick)
-            ick.clear()
+        ckpts.extend(getattr(f, "_owned_ckpts", None) or ())
         lvl = f.storageLevel
         if lvl.useMemory or lvl.useDisk:
             owned.append(f)
@@ -89,22 +99,27 @@ def release_local_checkpoint(jdf) -> None:
         pass
 
 
-def own_local_checkpoint(result: DataFrame, checkpointed: DataFrame) -> DataFrame:
-    """Tie a ``localCheckpoint(eager=True)`` frame's blocks to
-    ``result``'s lifetime, mirroring ``own_caches`` for checkpoints:
-    when the Python object for ``result`` is collected, the checkpoint
-    RDD is unpersisted immediately instead of waiting for the JVM
-    ContextCleaner to notice the dead reference (which can take until
-    the next full GC in a long-lived driver session).
+def own_local_checkpoint(result, checkpointed: DataFrame, *co_owners):
+    """Tie a ``localCheckpoint(eager=True)`` frame's blocks to the
+    lifetime of ``result`` and every object in ``co_owners``
+    (DataFrames, or a fitted model whose summary reads the frame), in
+    the way ``own_caches`` does for persists: once ALL of them have
+    been collected, the checkpoint RDD is unpersisted immediately
+    instead of waiting for the JVM ContextCleaner to notice the dead
+    reference (which can take until the next full GC in a long-lived
+    driver session).
 
     Sharper contract than plain persists: a released CHECKPOINT cannot
-    recompute (lineage truncated), so a composing operator that
-    derives a new plan from ``result`` and drops it MUST transfer
-    ownership (``own_caches(final, result)`` inherits it) or the
-    finalizer poisons the survivor. Holds only the py4j ``_jdf`` so
-    the finalizer does not keep the Python plan graph alive."""
-    _, ckpts = _owner_lists(result)
-    ckpts.append(checkpointed._jdf)
+    recompute (lineage truncated), so every object a caller may still
+    read through must be an owner, and a composing operator that
+    derives a new plan from ``result`` and drops it must pass
+    ``result`` to ``own_caches(final, result)``, which makes ``final``
+    an owner too. The owners hold only a lease on the py4j ``_jdf``,
+    so the release does not keep the Python plan graph alive.
+    Returns ``result``."""
+    lease = _CheckpointLease(checkpointed._jdf)
+    for owner in (result, *co_owners):
+        _owner_lists(owner)[1].append(lease)
     return result
 
 

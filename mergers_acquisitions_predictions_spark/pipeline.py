@@ -14,8 +14,10 @@ Reference stages and their homes here:
 
 Differences by design (not omissions): no RDD stages, explicit
 schemas, one Catalyst plan per stage, dedup-before-join instead of the
-reference's triple `.distinct` after joins, and a single-shuffle
-confusion matrix.
+reference's triple `.distinct` after joins, a single-shuffle
+confusion matrix, and a weighted-LR input materialized once (a local
+checkpoint) so the fit, AUC and confusion read the same rows and the
+80/20 split is an exact partition.
 """
 
 from __future__ import annotations

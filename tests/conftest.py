@@ -10,6 +10,11 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 
+def pytest_configure(config):
+    # A label for long end-to-end tests; it deselects nothing by default.
+    config.addinivalue_line("markers", "slow: long end-to-end test (label only)")
+
+
 @pytest.fixture(scope="session")
 def spark():
     # Modest parallelism for tiny test frames: 8 threads is faster than

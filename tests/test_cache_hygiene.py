@@ -187,6 +187,41 @@ def test_mllib_fits_leave_no_cached_blocks(spark):
     assert not left, [x.name()[:90] for x in left]
 
 
+def test_weighted_lr_checkpoint_outlives_every_owner(spark, tmp_path):
+    """train_weighted_lr materializes its input once, as a local
+    checkpoint that model, train and test share. A released checkpoint
+    cannot recompute, so scoring ``test`` must still work while it is
+    the only owner left (through a reloaded model, as m02 scores it);
+    once all three are dropped, the blocks must be released."""
+    from pyspark.ml.classification import LogisticRegressionModel
+    from pyspark.ml.functions import array_to_vector
+    from pyspark.sql import functions as F
+
+    from mergers_acquisitions_predictions_spark.ml.classify import (
+        evaluate_auc,
+        train_weighted_lr,
+    )
+    from mergers_acquisitions_predictions_spark.sources.readers import load_table
+
+    release_memoized_frames()
+    before = _quiescent_cached_rdds(spark)
+    e = load_table(spark, SF_SMOKE, "embeddings").select(
+        array_to_vector(F.col("embedding")).alias("features"),
+        (F.col("label") >= 5).cast("int").alias("y"),
+    )
+    model, train, test = train_weighted_lr(
+        e, features_col="features", label_col="y", threshold=0.5
+    )
+    path = str(tmp_path / "model")
+    model.write().save(path)
+    del model, train
+    gc.collect()
+    assert _n_cached_rdds(spark) > before  # test still owns the blocks
+    assert 0.0 <= evaluate_auc(LogisticRegressionModel.load(path), test, "y") <= 1.0
+    del test
+    assert _drains_to(spark, before)
+
+
 def test_memoized_bucket_frame_is_transparent(spark):
     """The session-scoped LSH bucket cache (util.memoized_frame) must
     be a pure perf knob: (a) repeat invocations return bit-identical

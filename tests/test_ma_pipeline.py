@@ -100,6 +100,34 @@ def test_stage3_training(spark, fixture_dfs):
     assert sum(cm.values()) == test.count()
 
 
+def test_stage3_split_is_exact_complement(spark, fixture_dfs):
+    """The rows the fit reads and the test rows partition the input.
+    The labeled TF-IDF frame's lineage has shuffles, so a split that
+    re-evaluates it can see another partition layout per consumer (a
+    persisted plan keeps its shuffle partitions, AQE coalesces an
+    uncached one), and `randomSplit` samples each partition by its
+    index: the two halves would then overlap and drop rows."""
+    companies_df, filings_df, deals_df = fixture_dfs
+    linked = link_deals_to_companies(deals_df, companies_df, "acquirer_name")
+    # (cik, report_date) is the row key below: keep one filing per key
+    filings = filings_df.dropDuplicates(["cik", "report_date"])
+    labeled = label_filings(filings, linked).withColumnRenamed("acquired", "label")
+    feats = build_tfidf_pipeline(min_df=2.0).fit(labeled).transform(labeled)
+    model, train, test = train_weighted_lr(feats, features_col="tfidf", seed=3)
+
+    def keys(df):
+        return [(r.cik, r.report_date) for r in df.select("cik", "report_date").collect()]
+
+    fitted = train.persist()  # what the fit read
+    try:
+        fit_keys = keys(fitted)
+    finally:
+        fitted.unpersist()
+    test_keys = keys(test)
+    assert not set(fit_keys) & set(test_keys)
+    assert sorted(fit_keys + test_keys) == sorted(keys(labeled))
+
+
 def test_class_weights_expression(spark):
     df = spark.createDataFrame([(1,)] * 3 + [(0,)] * 7, ["y"])
     w = with_class_weights(df, "y").collect()
